@@ -127,7 +127,6 @@ def build_queries(spark, sf_dir: str):
             pages,
             pages_ruleset(),
             options=OPTS,
-            repartition=False,
             columns=["url", "title", "language", "is_success", "bytes_in", "extract_ms"],
         )
 

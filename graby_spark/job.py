@@ -7,7 +7,6 @@ Spark-first layout of the reference's per-document pipeline
     → mime pre-route filter (JVM exprs)         -- S6/M1: cheap predicate
       BEFORE the expensive parse UDF (manual pushdown; Catalyst cannot
       reorder through an opaque UDF so stage order encodes it)
-    → salted repartition by (domain-hash, url-salt)  -- host-skew handling
     → mapInPandas(extract_batch)                -- C*/P*/R*/D*/O* inside one
       Arrow-batched Python stage; broadcast ruleset probed per row
     → multipage resolve (iterative self-join)   -- G1-G3
@@ -47,8 +46,6 @@ __all__ = [
     "run_extraction",
     "resolve_multipage",
     "resolve_single_page",
-    "attach_salt",
-    "auto_salt",
     "write_bucketed",
 ]
 
@@ -83,46 +80,6 @@ EXTRACT_SCHEMA = StructType(
         StructField("extract_ms", IntegerType()),
     ]
 )
-
-DEFAULT_SALT = 16
-
-
-def auto_salt(pages: DataFrame, n_partitions: int) -> int:
-    """Measured salt fan-out for the domain repartition: the
-    ``key_skew_stats.suggested_salt`` diagnostic applied to the actual
-    domain histogram of ``pages`` — ``ceil(max_domain_rows / (n_rows /
-    n_partitions))``, i.e. the fan-out that levels the hottest domain
-    down to one average partition payload.  Uniform domains → 1 (no
-    pointless key-space inflation), one mega-host → exactly the spread
-    it needs.
-
-    Scale shape: counts-only aggregation with map-side combine — the
-    shuffle carries at most (distinct domains per input partition ×
-    partitions) count records, never page payloads, so measuring the
-    histogram on the full input is cheap even at 100 TB; the result is a
-    single collected row."""
-    from .storage import key_skew_stats
-
-    domain = F.lower(F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1))
-    (row,) = key_skew_stats(
-        pages.select(domain.alias("_domain")), "_domain", n_partitions=n_partitions
-    ).collect()
-    return int(row["suggested_salt"])
-
-
-def attach_salt(df: DataFrame, salt: int = DEFAULT_SALT, partitions: int | None = None) -> DataFrame:
-    """Salted repartition by domain hash: one hot domain spreads over
-    ``salt`` partitions instead of creating a straggler (SURVEY.md §4
-    host-skew).  Ruleset locality is preserved *statistically* (ruleset is
-    broadcast, so this is purely a balance concern, not correctness)."""
-    domain = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt)).cast("int")
-    ).withColumn("_dhash", F.xxhash64(F.lower(domain)))
-    if partitions:
-        return salted.repartition(partitions, F.col("_dhash"), F.col("_salt"))
-    return salted.repartition(F.col("_dhash"), F.col("_salt"))
-
 
 def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str] | None = None):
     """Build the mapInPandas function.  The iterator form amortizes
@@ -242,13 +199,22 @@ def run_extraction(
     pages: DataFrame,
     ruleset: RuleSet,
     options: ExtractOptions | None = None,
-    salt: int | str = DEFAULT_SALT,
-    partitions: int | None = None,
-    repartition: bool = True,
     columns: list[str] | None = None,
+    *,
+    repartition: bool = False,
 ) -> DataFrame:
     """pages → extracted rows (one per page; multipage merge is a separate
     operator, see resolve_multipage).
+
+    Extraction runs in scan order: the stage is per-document and the
+    ruleset is broadcast, so no page needs another page of its host beside
+    it and the html payload never crosses a shuffle.  The byte-split scan
+    balances the work (extraction cost tracks bytes); the session's
+    ``files.minPartitionNum`` floor gives a small many-file or
+    many-row-group table 2 tasks per core.  One row group is one task:
+    spread such input first if its parse work outweighs a worker start.
+    ``repartition`` is accepted only as ``False``, the value existing
+    callers pass; there is no repartitioned path.
 
     ``columns`` selects which EXTRACT_SCHEMA fields are emitted (default:
     all).  Catalyst cannot prune columns through the opaque mapInPandas
@@ -259,6 +225,8 @@ def run_extraction(
     metadata-only consumers."""
     from .session import ship_package
 
+    if repartition is not False:
+        raise ValueError("run_extraction extracts in scan order; repartition must be False")
     ship_package(spark)  # executors import graby_spark from any launch cwd
     options = options or ExtractOptions()
     ruleset_bc = spark.sparkContext.broadcast(ruleset)
@@ -308,30 +276,9 @@ def run_extraction(
     needed = ["url", "warc_ts", "html", "lang", "content_type", "http_status"]
     pages = pages.select(*[c for c in needed if c in pages.columns])
 
-    if repartition:
-        # explicit partition count: AQE's shuffle coalescing would otherwise
-        # merge the (byte-small but CPU-heavy) Python stage down to a handful
-        # of tasks and cap parallelism — coalescing targets bytes, but this
-        # stage's cost is per-row parse CPU, not bytes
-        if partitions is None:
-            partitions = spark.sparkContext.defaultParallelism * 2
-        # salt="auto": measure the domain histogram (counts-only, map-side
-        # combined) and use key_skew_stats' suggested fan-out instead of
-        # the DEFAULT_SALT constant — uniform crawls skip the key-space
-        # inflation entirely, mega-host crawls get exactly the spread the
-        # hottest domain needs (VERDICT r04 #5)
-        if salt == "auto":
-            salt = auto_salt(pages, partitions)
-        # the salt/hash key columns exist only to drive the repartition —
-        # don't ship them over the Arrow socket
-        pages = attach_salt(pages, salt=salt, partitions=partitions).drop(
-            "_salt", "_dhash"
-        )
-
-    extracted = pages.mapInPandas(
+    return pages.mapInPandas(
         _make_extract_batch(ruleset_bc, options, out_names), out_schema
     )
-    return extracted
 
 
 def write_bucketed(
@@ -378,8 +325,16 @@ def resolve_single_page(
     request while swapping the document).  The matched subset is tiny, so
     the re-extraction pass is cheap; the join resolves relative links
     JVM-side first.
+
+    ``extracted`` is materialized eagerly, when this is called: its
+    extraction runs then, and every column of every page stays in executor
+    storage until the result is released.
     """
     options = options or ExtractOptions()
+    # both the candidate probe and the anti-join below read ``extracted``;
+    # materialize it once so each page crosses into Python once, not twice
+    # (same shape as resolve_multipage's checkpointed lookup)
+    extracted = extracted.localCheckpoint(eager=True)
 
     # the extraction UDF already emitted an RFC 3986-absolute
     # single_page_url (extract_one resolves via textutils.make_absolute);
@@ -415,12 +370,11 @@ def resolve_single_page(
         "lang",
         *(c for c in ("content_type", "http_status") if c in target_pages.columns),
     )
-    replacements = run_extraction(
-        spark, reextract_input, ruleset, options=options, repartition=False
-    )
-    kept = extracted.join(
-        replacements.select(F.col("url").alias("u2")), extracted.url == F.col("u2"), "left_anti"
-    )
+    replacements = run_extraction(spark, reextract_input, ruleset, options=options)
+    # extract_batch emits one row per input row under its input url, so
+    # the replaced keys are known before extraction: anti-join on them and
+    # the replacement pass stays the only Python stage in the plan
+    kept = extracted.join(target_pages.select(F.col("orig_url").alias("url")), "url", "left_anti")
     return kept.unionByName(replacements)
 
 

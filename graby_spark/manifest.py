@@ -306,19 +306,20 @@ def write_with_manifest(
             "completed_at",
         )
     )
-    stats = stats.cache()
-    stats.write.mode("append").parquet(manifest_path)
-    agg = stats.agg(
-        F.sum("url_count").alias("urls"),
-        F.sum("ok_count").alias("ok"),
-        F.sum("fail_count").alias("fail"),
-    ).collect()[0]
+    # collect the (at most n_buckets) lineage rows BEFORE the append: when
+    # the input reads the manifest (the filter_resumable resume idiom), the
+    # append refreshes every plan over that path, and a re-read afterwards
+    # would find no bucket left to count
+    rows = stats.collect()
+    spark.createDataFrame(rows, stats.schema).coalesce(1).write.mode("append").parquet(
+        manifest_path
+    )
     with_bucket.unpersist()
     return {
         "run_id": run_id,
         "snapshot_id": snapshot_id,
-        "urls": agg["urls"],
-        "ok": agg["ok"],
-        "fail": agg["fail"],
+        "urls": sum(r["url_count"] for r in rows),
+        "ok": sum(r["ok_count"] for r in rows),
+        "fail": sum(r["fail_count"] for r in rows),
         "wall_ms": wall_ms,
     }

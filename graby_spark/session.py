@@ -21,7 +21,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: shuffle coalescing + skew-join splitting for the multipage
-        # self-join and the host-skewed repartition (SURVEY.md §4)
+        # and single-page self-joins on host-skewed link graphs (SURVEY.md §4)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -33,7 +33,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"),
         )
         # extraction is CPU-heavy per byte: smaller input splits give the
-        # scan/shuffle-write side enough tasks to keep every core busy
+        # scan-order extraction stage enough tasks to keep every core busy
         # (default 128 MB splits starve a 32-core box on a sub-GB table)
         .config(
             "spark.sql.files.maxPartitionBytes",
@@ -43,9 +43,12 @@ def get_spark(
         # constant (guide §6): byte-based splitting packs a small many-file
         # table into a handful of splits (each file charged openCostInBytes),
         # which starves the CPU-bound extraction stage that follows the scan.
+        # Extraction runs in scan order, so this floor is its only source of
+        # parallelism on small tables.
         # At production scale the split count dwarfs this floor and the
-        # setting is inert; locally it keeps scan-rooted pipelines at
-        # 2 tasks/core without adding any shuffle.
+        # setting is inert; locally it keeps scan-rooted pipelines over
+        # many-file or many-row-group tables at 2 tasks/core without adding
+        # any shuffle (a single row group is still read by one task).
         .config(
             "spark.sql.files.minPartitionNum",
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(2 * int(cpus))),
@@ -54,8 +57,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # shuffle spill on tmpfs when available: the extraction job shuffles the
-    # full html payload once (salted repartition); a ~240 MB/s disk would
+    # shuffle spill on tmpfs when available: the stitching self-joins, dedup
+    # and packing stages shuffle document text; a ~240 MB/s disk would
     # serialize an otherwise CPU-parallel pipeline on a many-core box
     if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         shm_dir = "/dev/shm/spark-graby"

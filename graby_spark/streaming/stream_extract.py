@@ -61,9 +61,7 @@ def stream_extract(
     )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = run_extraction(
-            spark, batch_df, ruleset, options=options, repartition=False
-        )
+        extracted = run_extraction(spark, batch_df, ruleset, options=options)
         extracted.write.mode("append").parquet(output_dir)
 
     writer = (

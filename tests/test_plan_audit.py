@@ -11,6 +11,10 @@ counting rule on plans whose shape is known by construction:
 - a broadcast-joined plan has ZERO shuffle Exchanges (never -1), one
   BroadcastHashJoin, and its BroadcastExchange is not miscounted as a
   shuffle.
+
+They also pin the extraction plan shapes: ``run_extraction`` over a
+parquet pages table is the scan plus one Python stage with no shuffle,
+and ``resolve_single_page`` leaves only its replacement pass in Python.
 """
 
 from __future__ import annotations
@@ -78,3 +82,50 @@ def test_python_stage_counted_once(spark):
     df = spark.range(10).mapInPandas(ident, "id long")
     res = plan_audit.audit_one("one_py_stage", df)
     assert res["python_stages"] == 1, res
+
+
+@pytest.fixture(scope="module")
+def sf_dir(spark, tmp_path_factory):
+    """A 40-row documents table in the testdata layout the page builders read."""
+    path = tmp_path_factory.mktemp("sf")
+    spark.range(40).selectExpr(
+        "id AS doc_id",
+        "concat('Article ', id, ' says the quick brown fox jumps over the lazy dog.') AS text",
+        "'en' AS lang",
+        "'synthetic' AS source",
+        "60L AS n_chars",
+    ).write.parquet(str(path / "documents.parquet"))
+    return str(path)
+
+
+def _pages_table(spark, build, sf_dir, tmp_path):
+    path = str(tmp_path / "pages")
+    build(spark, sf_dir).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_extraction_is_scan_order(spark, sf_dir, tmp_path):
+    from graby_spark.job import run_extraction
+    from graby_spark.pages import build_pages_df, pages_ruleset
+
+    pages = _pages_table(spark, build_pages_df, sf_dir, tmp_path)
+    res = plan_audit.audit_one("extract", run_extraction(spark, pages, pages_ruleset()))
+    assert res["shuffles"] == 0, res
+    assert res["python_stages"] == 1, res
+    with pytest.raises(ValueError):
+        run_extraction(spark, pages, pages_ruleset(), repartition=True)
+
+
+def test_single_page_extracts_each_page_once(spark, sf_dir, tmp_path):
+    """The replacement pass is the only Python stage left in the result:
+    the input extraction is materialized once, not re-run by the
+    candidate probe and again by the anti-join."""
+    from graby_spark.job import resolve_single_page, run_extraction
+    from graby_spark.pages import build_singlepage_pages_df, pages_ruleset
+
+    pages = _pages_table(spark, build_singlepage_pages_df, sf_dir, tmp_path)
+    extracted = run_extraction(spark, pages, pages_ruleset())
+    final = resolve_single_page(spark, pages, extracted, pages_ruleset())
+    res = plan_audit.audit_one("single_page", final)
+    assert res["python_stages"] == 1, res
+    assert final.count() == pages.count()  # each replaced row swapped, none doubled

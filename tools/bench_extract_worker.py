@@ -76,7 +76,6 @@ def main() -> None:
             pages,
             pages_ruleset(),
             options=opts,
-            repartition=False,
             columns=["url", "title", "language", "is_success", "bytes_in", "extract_ms"],
         )
         .where("is_success")

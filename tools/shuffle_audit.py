@@ -21,7 +21,7 @@ the noop sink (no driver collect, no result-size bias).
 Output: SHUFFLE.md — per-query input MB, shuffle MB, write/input ratio,
 a shape classification, and the 100 TB projection (ratio x 100 TB =
 cluster shuffle volume), plus the invariants worth pinning (extraction
-moves the payload exactly once; dedup families shuffle keys only).
+never moves the payload; dedup families shuffle keys only).
 
 Run:  python tools/shuffle_audit.py [sf_dir]   (default /root/testdata/sf0.1)
 """
@@ -40,7 +40,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 
 #: registry keys audited, chosen to cover every shuffle archetype the
-#: engine uses: payload-moves-once extraction, keys-only dedup banding,
+#: engine uses: payload-free scan-order extraction, keys-only dedup banding,
 #: iterative ranks-only pagerank, broadcast-probe ANN scans, the global
 #: tf-idf/BM25 index builds, and the packing/sampling tail.  The second
 #: element names the query's payload table — the denominator for the
@@ -330,16 +330,16 @@ def _write_md(rows: list[dict], sf_dir: str) -> None:
         "`scales with` names:",
         "",
         "- **doc bytes** (extraction, stitching, filter pipelines): network =",
-        "  ratio x corpus bytes.  Extraction's salted repartition is the",
-        "  floor for any operator that must co-locate full documents; at",
-        "  ratio ~1 a 100 TB corpus crosses the wire once — ~90 s of pure",
-        "  network on a 1000-node 10 Gb/s-bisection cluster, amortized over",
-        "  a parse stage that costs hours of CPU.  For the SINGLE-operator",
-        "  extraction row the pinned band is 0.4-1.6",
-        "  (tests/test_shuffle_shape.py) — a ratio near ~2 would mean the",
-        "  payload moves twice, a defect.  A COMPOSED pipeline legitimately",
-        "  pays one crossing per co-locating stage: pipeline_pretrain's",
-        "  ~1.6 is the dedup window plus the packing bins, each over the",
+        "  ratio x corpus bytes.  Extraction is per-document with a",
+        "  broadcast ruleset, so it runs in scan order and ships no page",
+        "  bytes: the SINGLE-operator extraction row is pinned at ratio",
+        "  <= 0.1 (tests/test_shuffle_shape.py), and a ratio near ~1 would",
+        "  mean a payload exchange crept into the plan.  Only an operator",
+        "  that must co-locate full documents pays a crossing: at ratio ~1",
+        "  a 100 TB corpus crosses the wire once — ~90 s of pure network on",
+        "  a 1000-node 10 Gb/s-bisection cluster.  A COMPOSED pipeline pays",
+        "  one crossing per co-locating stage: pipeline_pretrain's ~1.6 is",
+        "  the dedup window plus the packing bins, each over the",
         "  filter-attenuated corpus — two semantic co-locations, not a",
         "  re-ship.",
         "- **doc count** (minhash/simhash banding, exact dedup, ANN",
@@ -363,8 +363,8 @@ def _write_md(rows: list[dict], sf_dir: str) -> None:
         "  row in the audit BY CONSTRUCTION of the test data.",
         "- **chain bytes** (multipage stitching): denominator is the",
         "  CONTINUATION SUBSET — pages that are part of a next-page chain —",
-        "  not the corpus.  Those pages cross several times (extraction",
-        "  repartition, per-hop stitch joins, final merge), but the corpus",
+        "  not the corpus.  Those pages cross several times (per-hop",
+        "  stitch joins, final merge), but the corpus",
         "  is pruned to continuation keys ONCE via a broadcast semi-join",
         "  before any of it, so corpus-relative cost = this ratio x the",
         "  chain fraction (~100% in this fixture by construction; a few",

@@ -7,7 +7,7 @@ Usage (north_rule deployment shape):
         --py-files dist/graby_spark.zip \\
         tools/submit_job.py <sf_dir> <output_dir> <manifest_dir> [site_config_dir ...]
 
-Reads/synthesizes the pages table, runs the salted extraction, writes the
+Reads/synthesizes the pages table, extracts it in scan order, writes the
 bucket-partitioned output plus the per-partition manifest (resumable: rerun
 the same command after a crash and completed buckets are skipped).
 """
