@@ -17,13 +17,24 @@ object bodies, so a raw-byte scan alone goes metadata-blind on them.
 Contained objects can never themselves hold streams (ISO 32000-1 §7.5.7),
 so expansion only needs to feed the metadata search space.
 
-Unsupported constructs degrade to partial/empty text, never raise.
+Unsupported constructs degrade to partial/empty text, never raise.  Cost
+is bounded on hostile input: every scan is linear in the bytes scanned
+(an opening marker — ``obj``, ``stream``, ``BT``, ``beginbf*``, ``[``,
+``(`` — is never rescanned to the end of its block for a missing closer),
+and inflated stream bytes are capped per document at
+``MAX_INFLATED_BYTES`` whatever the deflate ratio.  The cap is spent in
+file order by every FlateDecode stream, images included: the stream that
+reaches it is cut short and all later ones are skipped, so their page
+text, ToUnicode CMaps and ObjStm objects (with any Info metadata in them)
+are lost.  The largest reference PDF inflates to 2.4 MiB in all.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from bisect import bisect_right
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 __all__ = ["PdfContent", "extract_pdf"]
@@ -37,8 +48,16 @@ class PdfContent:
     creation_date: str | None = None
 
 
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj(.*?)endobj", re.S)
-_STREAM_RE = re.compile(rb"^(.*?)stream\r?\n(.*?)endstream", re.S)
+# Inflated stream bytes one document may produce, all streams together: a
+# 10 MB deflate bomb would otherwise inflate ~1000x inside one worker.  The
+# peak is about twice this, as zlib copies its output blocks into one bytes.
+MAX_INFLATED_BYTES = 64 << 20
+
+# ``N G obj`` header; the lookbehind starts it at the head of a digit run
+# only (a later start in the run ends at the same place, so it would
+# rescan the run for the same outcome)
+_OBJ_HEAD_RE = re.compile(rb"(?<!\d)\d+\s+\d+\s+obj")
+_STREAM_KW_RE = re.compile(rb"stream\r?\n")
 _INFO_KEY_RE = {
     "title": re.compile(rb"/Title\s*(?:\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]+)>)"),
     "author": re.compile(rb"/Author\s*(?:\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]+)>)"),
@@ -92,21 +111,43 @@ def _decode_meta_bytes(raw: bytes) -> str:
     return raw.decode("latin-1", "replace")
 
 
-def _inflate(data: bytes) -> bytes | None:
-    data = data.rstrip(b"\r\n")
+def _inflate(data: bytes, max_length: int) -> bytes | None:
+    """At most ``max_length`` (> 0) inflated bytes; a truncated stream
+    yields what it holds, a corrupt one None."""
     try:
-        return zlib.decompress(data)
+        return zlib.decompressobj().decompress(data.rstrip(b"\r\n"), max_length)
     except zlib.error:
-        try:
-            return zlib.decompressobj().decompress(data)
-        except zlib.error:
-            return None
+        return None
+
+
+def _spans(data: bytes, start: bytes, end: bytes) -> Iterator[bytes]:
+    """The bytes between each ``start`` and the first ``end`` after it, as
+    ``re.findall(start + b"(.*?)" + end, data, re.S)`` finds them, in
+    linear time: once one ``start`` has no ``end`` after it no later one
+    has, so the scan stops instead of rescanning the tail from each."""
+    pos = 0
+    while (i := data.find(start, pos)) >= 0:
+        j = data.find(end, i + len(start))
+        if j < 0:
+            return
+        yield data[i + len(start) : j]
+        pos = j + len(end)
+
+
+def _object_bodies(data: bytes) -> Iterator[bytes]:
+    """Body of each ``N G obj … endobj`` object, as the lazy
+    ``(\\d+)\\s+(\\d+)\\s+obj(.*?)endobj`` findall found them."""
+    pos = 0
+    while m := _OBJ_HEAD_RE.search(data, pos):
+        j = data.find(b"endobj", m.end())
+        if j < 0:
+            return
+        yield data[m.end() : j]
+        pos = j + len(b"endobj")
 
 
 # -- ToUnicode CMap -----------------------------------------------------------
 
-_BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.S)
-_BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.S)
 _HEXPAIR_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>")
 _HEXTRIPLE_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>")
 
@@ -122,10 +163,10 @@ def _parse_cmap(data: bytes) -> dict[int, str]:
         except Exception:
             return ""
 
-    for section in _BFCHAR_RE.findall(data):
+    for section in _spans(data, b"beginbfchar", b"endbfchar"):
         for src, dst in _HEXPAIR_RE.findall(section):
             mapping[int(src, 16)] = uni(dst)
-    for section in _BFRANGE_RE.findall(data):
+    for section in _spans(data, b"beginbfrange", b"endbfrange"):
         for lo, hi, dst in _HEXTRIPLE_RE.findall(section):
             lo_i, hi_i, dst_i = int(lo, 16), int(hi, 16), int(dst, 16)
             if hi_i - lo_i > 65535:
@@ -137,15 +178,75 @@ def _parse_cmap(data: bytes) -> dict[int, str]:
 
 # -- content-stream text ------------------------------------------------------
 
-_BT_ET_RE = re.compile(rb"BT(.*?)ET", re.S)
+# One text-showing or line-moving operator per match.  The openers of a
+# literal string and of an array show match their opening byte only and are
+# completed in ``_text_ops``: as full alternatives they would rescan to the
+# end of the block from every opener that lacks a closer.
 _TEXT_OP_RE = re.compile(
-    rb"\(((?:[^()\\]|\\.)*)\)\s*(Tj|'|\")"  # literal string show
+    rb"(\()"  # literal string show
     rb"|<([0-9A-Fa-f\s]+)>\s*(Tj|'|\")"  # hex string show
-    rb"|\[(.*?)\]\s*TJ"  # array show
+    rb"|(\[)"  # array show, up to the next `]\s*TJ`
     rb"|(T\*|TD|Td)",  # line moves
     re.S,
 )
-_ARRAY_ITEM_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]+)>|(-?\d+(?:\.\d+)?)")
+_TJ_END_RE = re.compile(rb"\]\s*TJ")
+# A literal string and, if it is shown, its closing ``)`` and operator.  The
+# body holds a ``(`` only escaped, as ``\(``; a string opened there runs to
+# the same end, so it is shown exactly when the outer one is.
+_LITERAL_SHOW_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)(\)\s*(?:Tj|'|\"))?", re.S)
+# One TJ array item; group 2 is empty for a string no ``)`` closes.  No
+# re.S: inside an array a backslash escapes no newline.
+_ARRAY_ITEM_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)(\)?)|<([0-9A-Fa-f\s]+)>|(-?\d+(?:\.\d+)?)")
+_HEX_OR_NUMBER_RE = re.compile(rb"<([0-9A-Fa-f\s]+)>|(-?\d+(?:\.\d+)?)")
+
+
+def _text_ops(bt: bytes) -> Iterator[tuple[bytes | None, bytes | None, bytes | None, bytes | None]]:
+    """``(literal, hex, array, move)``, one of them set, for each operator
+    of a BT block, matched exactly as ``finditer`` matched the former single
+    regex (whose literal and ``\\[(.*?)\\]\\s*TJ`` array alternatives
+    rescanned the block from every unclosed opener) but in linear time.
+
+    A ``[`` pairs with the first ``]\\s*TJ`` after it, from a list built
+    once per block; without one the search resumes a byte on, as
+    ``finditer`` did.  A ``(`` whose string is not shown is scanned once:
+    every ``(`` inside that string is skipped."""
+    tj_ends = list(_TJ_END_RE.finditer(bt))
+    closers = [m.start() for m in tj_ends]
+    dead = 0  # a string opened before this offset is not shown
+    pos = 0
+    while m := _TEXT_OP_RE.search(bt, pos):
+        at, pos = m.start(), m.end()
+        if m.group(1):
+            if at < dead:
+                continue
+            show = _LITERAL_SHOW_RE.match(bt, at)
+            if show.group(2) is None:
+                dead = show.end()
+                continue
+            yield show.group(1), None, None, None
+            pos = show.end()
+        elif m.group(4):
+            i = bisect_right(closers, at)
+            if i < len(tj_ends):
+                yield None, None, bt[at + 1 : closers[i]], None
+                pos = tj_ends[i].end()
+        else:
+            yield None, m.group(2), None, m.group(5)
+
+
+def _array_items(array: bytes) -> list[tuple[bytes, bytes, bytes]]:
+    """``(literal, hex, number)`` for each item of a TJ array, exactly as
+    the former ``findall`` without the empty group 2, in linear time.  That
+    regex rescanned an unclosed string from each ``(`` inside it; all of
+    them fail alike, so only the hex and number items it found inside the
+    string are kept."""
+    items = []
+    for lit, close, hexs, num in _ARRAY_ITEM_RE.findall(array):
+        if close or hexs or num:
+            items.append((lit, hexs, num))
+        else:
+            items.extend((b"", h, n) for h, n in _HEX_OR_NUMBER_RE.findall(lit))
+    return items
 
 
 def _decode_string(raw: bytes, cmap: dict[int, str] | None, two_byte: bool) -> str:
@@ -159,34 +260,36 @@ def _decode_string(raw: bytes, cmap: dict[int, str] | None, two_byte: bool) -> s
     return raw.decode("latin-1", "replace")
 
 
+def _decode_hex(hexs: bytes, cmap: dict[int, str] | None, two_byte: bool) -> str:
+    clean = re.sub(rb"\s+", b"", hexs)
+    if len(clean) % 2:
+        clean += b"0"
+    return _decode_string(bytes.fromhex(clean.decode("ascii")), cmap, two_byte)
+
+
 def _extract_stream_text(data: bytes, cmap: dict[int, str] | None) -> list[str]:
     two_byte = bool(cmap) and max(cmap.keys(), default=0) > 255
     lines: list[str] = []
-    for bt in _BT_ET_RE.findall(data):
+    for bt in _spans(data, b"BT", b"ET"):
         parts: list[str] = []
-        for m in _TEXT_OP_RE.finditer(bt):
-            lit, _op1, hexs, _op2, array, move = m.groups()
+        seen = False  # some part holds a non-space character
+        for lit, hexs, array, move in _text_ops(bt):
             if move is not None:
-                if parts and "".join(parts).strip():
+                if seen:
                     lines.append("".join(parts))
-                    parts = []
+                    parts, seen = [], False
                 continue
+            first = len(parts)
             if lit is not None:
                 parts.append(_decode_string(_unescape_pdf_string(lit), cmap, two_byte))
             elif hexs is not None:
-                clean = re.sub(rb"\s+", b"", hexs)
-                if len(clean) % 2:
-                    clean += b"0"
-                parts.append(_decode_string(bytes.fromhex(clean.decode("ascii")), cmap, two_byte))
-            elif array is not None:
-                for alit, ahex, anum in _ARRAY_ITEM_RE.findall(array):
+                parts.append(_decode_hex(hexs, cmap, two_byte))
+            else:
+                for alit, ahex, anum in _array_items(array):
                     if alit:
                         parts.append(_decode_string(_unescape_pdf_string(alit), cmap, two_byte))
                     elif ahex:
-                        clean = re.sub(rb"\s+", b"", ahex)
-                        if len(clean) % 2:
-                            clean += b"0"
-                        parts.append(_decode_string(bytes.fromhex(clean.decode("ascii")), cmap, two_byte))
+                        parts.append(_decode_hex(ahex, cmap, two_byte))
                     elif anum:
                         # large negative kerning inside TJ ≈ an inter-word gap
                         try:
@@ -194,7 +297,8 @@ def _extract_stream_text(data: bytes, cmap: dict[int, str] | None) -> list[str]:
                                 parts.append(" ")
                         except ValueError:
                             pass
-        if parts and "".join(parts).strip():
+            seen = seen or any(part.strip() for part in parts[first:])
+        if seen:
             lines.append("".join(parts))
     return lines
 
@@ -243,14 +347,22 @@ def extract_pdf(data: bytes) -> PdfContent:
         streams: list[tuple[bytes, bytes]] = []  # (dict part, inflated data)
         cmaps: list[dict[int, str]] = []
         objstm_bodies: list[bytes] = []
-        for _num, _gen, body in _OBJ_RE.findall(data):
-            sm = _STREAM_RE.match(body)
+        budget = MAX_INFLATED_BYTES
+        for body in _object_bodies(data):
+            sm = _STREAM_KW_RE.search(body)
             if not sm:
                 continue
-            dict_part, raw = sm.group(1), sm.group(2)
-            content = _inflate(raw) if b"FlateDecode" in dict_part else raw.rstrip(b"\r\n")
-            if content is None:
+            end = body.find(b"endstream", sm.end())
+            if end < 0:
                 continue
+            dict_part, raw = body[: sm.start()], body[sm.end() : end]
+            if b"FlateDecode" in dict_part:
+                content = _inflate(raw, budget) if budget > 0 else None
+                if content is None:
+                    continue
+                budget -= len(content)
+            else:
+                content = raw.rstrip(b"\r\n")
             if b"/ObjStm" in dict_part:
                 objstm_bodies.extend(_expand_objstm(dict_part, content))
                 continue

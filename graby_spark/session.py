@@ -6,7 +6,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_for_extraction"]
+__all__ = ["get_spark"]
 
 
 def get_spark(
@@ -65,11 +65,6 @@ def get_spark(
         os.makedirs(shm_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", shm_dir)
     return builder.getOrCreate()
-
-
-def tune_for_extraction(spark: SparkSession) -> None:
-    """Settings that only matter for the heavy extraction stage."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
 
 
 def ship_package(spark: SparkSession) -> None:
